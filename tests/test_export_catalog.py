@@ -360,6 +360,32 @@ def test_pq_export_decodes_fixed_point_codebook(spark, sf_dir, tmp_path):
     assert got == want
 
 
+def test_pq_export_corrupt_meta_raises(spark, sf_dir, tmp_path):
+    """Only a MISSING meta side table means "no metadata columns": a
+    corrupt one must fail the export instead of silently dropping the
+    payload columns."""
+    from vector_io_spark.operators.export_catalog import (
+        read_pq_reconstructed,
+    )
+    from vector_io_spark.operators.pq_exact import write_pq_exact_index
+
+    emb = load(spark, sf_dir, "embeddings").select(
+        "vec_id", "embedding", "label"
+    )
+    path = str(tmp_path / "pq")
+    write_pq_exact_index(
+        emb, path, num_subspaces=8, codebook_size=8,
+        metadata_cols=("label",),
+    )
+    meta_dir = tmp_path / "pq" / "meta"
+    parts = sorted(meta_dir.glob("part-*.parquet"))
+    assert parts
+    for part in parts:
+        part.write_bytes(b"not a parquet file")
+    with pytest.raises(Exception):
+        read_pq_reconstructed(spark, path).collect()
+
+
 def test_lossy_export_records_provenance_and_reimports(
     spark, sf_dir, tmp_path
 ):

@@ -39,6 +39,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from vector_io_spark import artifact_memo
 from vector_io_spark.operators.similarity import _apply_tombstones
 
 # bookkeeping levels that never belong to the logical dataset
@@ -72,8 +73,9 @@ def read_sq8_reconstructed(
 
     Scale shape: one catalog scan; the bounds row broadcasts as
     literals; reconstruction is a codegen'd zip_with — no Python."""
-    brow = spark.read.parquet(f"{path}/bounds").collect()[0]
-    los, his = list(brow["los"]), list(brow["his"])
+    from vector_io_spark.operators.sq8 import _load_sq8_bounds
+
+    los, his = _load_sq8_bounds(spark, path)
     scan = spark.read.parquet(f"{path}/cells")
     scan = _apply_tombstones(spark, path, scan, "read_sq8_reconstructed")
     los_lit = F.array(*[F.lit(float(x)) for x in los])
@@ -165,11 +167,12 @@ def read_pq_reconstructed(
     row — never caller-supplied."""
     from pyspark.sql.functions import broadcast
 
+    from vector_io_spark.operators.pq_exact import _load_pq_params
+
     codes = spark.read.parquet(f"{path}/codes")
     codes = _apply_tombstones(spark, path, codes, "read_pq_reconstructed")
     cb = spark.read.parquet(f"{path}/codebook")
-    prm = spark.read.parquet(f"{path}/params").collect()[0]
-    scale = float(prm["scale"])
+    scale = float(_load_pq_params(spark, path)["scale"])
     comps = codes.join(
         broadcast(cb),
         (codes["s"] == cb["s"]) & (codes["code"] == cb["c"]),
@@ -191,12 +194,10 @@ def read_pq_reconstructed(
             F.transform("__e", lambda e: e["__v"]).alias(vec_name),
         )
     )
-    try:
+    # only a MISSING side table means "no metadata": a corrupt or
+    # unreadable one must fail the export, not drop its columns
+    if artifact_memo.path_exists(spark, f"{path}/meta"):
         meta = spark.read.parquet(f"{path}/meta")
-        has_meta = True
-    except Exception:
-        has_meta = False
-    if has_meta:
         assembled = assembled.join(meta, id_col, "left")
     return assembled
 

@@ -29,6 +29,7 @@ follows the published FAISS IndexPQ structure.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
+from vector_io_spark import artifact_memo
 from vector_io_spark.session import local_rows_df
 from pyspark.sql import functions as F
 
@@ -807,6 +808,17 @@ def write_pq_exact_index(
     ).coalesce(1).write.mode("overwrite").parquet(f"{path}/params")
 
 
+def _first_row(rows):
+    return rows[0]
+
+
+def _load_pq_params(spark, path: str):
+    """The one ``params`` row of a :func:`write_pq_exact_index` layout
+    (num_subspaces, codebook_size, iters, scale, dim), memoized on the
+    table's listing (:mod:`vector_io_spark.artifact_memo`)."""
+    return artifact_memo.small_table(spark, f"{path}/params", _first_row)
+
+
 def pq_adc_topk_from_index(
     spark,
     path: str,
@@ -845,21 +857,20 @@ def pq_adc_topk_from_index(
     # broadcast anti-join against the index's live tombstones
     codes = _apply_tombstones(spark, path, codes, "pq_adc_topk_from_index")
     cent = spark.read.parquet(f"{path}/codebook")
-    prm = spark.read.parquet(f"{path}/params").collect()[0]
+    prm = _load_pq_params(spark, path)
     ranked = _pq_adc_rank_exact(
         codes, cent, queries, id_col, vec_col, query_id_col, k,
         int(prm["num_subspaces"]), int(prm["scale"]), int(prm["dim"]),
     )
     if not return_cols:
         return ranked
-    try:
-        meta = spark.read.parquet(f"{path}/meta")
-    except Exception as e:
+    if not artifact_memo.path_exists(spark, f"{path}/meta"):
         raise ValueError(
             f"pq_adc_topk_from_index: return_cols={list(return_cols)} "
             f"requested but {path} has no meta side table — rebuild "
             "with write_pq_exact_index(..., metadata_cols=...)."
-        ) from e
+        )
+    meta = spark.read.parquet(f"{path}/meta")
     missing = [c for c in return_cols if c not in meta.columns]
     if missing:
         raise ValueError(

@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 
+from vector_io_spark import artifact_memo
 from vector_io_spark.session import local_rows_df
 from vector_io_spark.functions.vectors import (
     chebyshev_distance,
@@ -1272,17 +1273,24 @@ def _cell_assign_udf(cent):
     return pandas_udf(_cell_batch, IntegerType())
 
 
-def _load_centroid_matrix(spark, path: str):
-    """Load the persisted centroid table of a `write_ivf_index` layout as
-    a dense (num_cells x dim) ndarray ordered by cell id — shared by the
-    probe and append paths."""
+def _centroid_matrix(cent_rows):
     import numpy as np
 
-    cent_rows = spark.read.parquet(f"{path}/centroids").collect()
     cent = np.zeros((len(cent_rows), len(cent_rows[0]["centroid"])))
     for r in cent_rows:
         cent[r["cell"]] = r["centroid"]
+    cent.setflags(write=False)
     return cent
+
+
+def _load_centroid_matrix(spark, path: str):
+    """Load the persisted centroid table of a `write_ivf_index` layout as
+    a dense, read-only (num_cells x dim) ndarray ordered by cell id —
+    shared by the probe and append paths, memoized on the table's
+    listing (:mod:`vector_io_spark.artifact_memo`)."""
+    return artifact_memo.small_table(
+        spark, f"{path}/centroids", _centroid_matrix
+    )
 
 
 
@@ -1467,7 +1475,7 @@ def _ivf_probe_scored(
         f"{query_id} {qid_dt}, cell int, __qv array<float>",
     )
     cells = sorted({c for _, c in probe_pairs})
-    scan = spark.read.parquet(f"{path}/cells")
+    scan = artifact_memo.read_layout(spark, path, "cells")
     _check_return_cols(
         scan, return_cols, corpus_id, corpus_vec, query_id, caller,
     )
@@ -1897,19 +1905,27 @@ def _write_ivfpq_artifacts(
     )
 
 
-def _load_ivfpq_artifacts(spark, path: str):
-    """(cents, cb) ndarrays from a `write_ivfpq_index` layout. Both are
-    a few KB — codebook loading is driver-side by design."""
+def _codebook_tensor(cb_rows):
     import numpy as np
 
-    cents = _load_centroid_matrix(spark, path)
-    cb_rows = spark.read.parquet(f"{path}/codebooks").collect()
     m_sub = max(r["s"] for r in cb_rows) + 1
     kk = max(r["c"] for r in cb_rows) + 1
     sub = len(cb_rows[0]["codeword"])
     cb = np.zeros((m_sub, kk, sub))
     for r in cb_rows:
         cb[r["s"], r["c"]] = r["codeword"]
+    cb.setflags(write=False)
+    return cb
+
+
+def _load_ivfpq_artifacts(spark, path: str):
+    """(cents, cb) read-only ndarrays from a `write_ivfpq_index` layout.
+    Both are a few KB — codebook loading is driver-side by design, and
+    memoized on each table's listing."""
+    cents = _load_centroid_matrix(spark, path)
+    cb = artifact_memo.small_table(
+        spark, f"{path}/codebooks", _codebook_tensor
+    )
     return cents, cb
 
 
@@ -1926,8 +1942,9 @@ def ivfpq_index_probe_topk(
     return_cols: tuple = (),
 ) -> DataFrame:
     """Top-k ADC probe against a persisted :func:`write_ivfpq_index`
-    layout. Centroids + codebooks (KBs) collect to the driver; each
-    query's ``nprobe`` cells and residual LUTs resolve there; the codes
+    layout. Centroids + codebooks (KBs) collect to the driver, once per
+    build (memoized on their listing, :mod:`vector_io_spark.artifact_memo`);
+    each query's ``nprobe`` cells and residual LUTs resolve there; the codes
     scan reads ONLY the probed ``cell=<i>`` directories —
     ``.where(cell.isin(...))`` becomes a PartitionFilter, so unprobed
     cells cost zero I/O — and scoring/ranking are the exact
@@ -1972,7 +1989,7 @@ def ivfpq_index_probe_topk(
         "ivfpq_index_probe_topk",
     )
     cells = sorted({c for _, c in probe_rows})
-    scan = spark.read.parquet(f"{path}/cells")
+    scan = artifact_memo.read_layout(spark, path, "cells")
     _check_return_cols(
         scan, return_cols, corpus_id, "embedding", query_id,
         "ivfpq_index_probe_topk",
@@ -2040,8 +2057,8 @@ def ivfpq_index_stats(spark, path: str) -> DataFrame:
     1-row total (with the nlist-row centroid count) broadcast back.
     Nothing corpus-sized anywhere.
     """
-    codes = spark.read.parquet(f"{path}/cells")
-    nlist = spark.read.parquet(f"{path}/centroids").count()
+    codes = artifact_memo.read_layout(spark, path, "cells")
+    nlist = len(_load_centroid_matrix(spark, path))
     has_batches = "ingest_batch" in codes.columns
     delta = (
         F.sum(
@@ -2156,9 +2173,10 @@ def _index_metadata_cols(
     built with corpus_vec="vector" would otherwise misclassify its own
     vector column as metadata — r7 review). Shared by append/rebuild
     so neither can silently drop what the build persisted."""
+    schema = artifact_memo.read_layout(spark, path, "cells").schema
     return [
         f.name
-        for f in spark.read.parquet(f"{path}/cells").schema.fields
+        for f in schema.fields
         if f.name
         not in (corpus_id, corpus_vec, "cell", "code", "ingest_batch")
     ]
@@ -2266,7 +2284,7 @@ def rebuild_ivf_if_drifted(
     composition is identical; num_cells is read from the persisted
     centroid table, never caller-supplied. Returns the same decision
     dict."""
-    nlist = int(spark.read.parquet(f"{path}/centroids").count())
+    nlist = len(_load_centroid_matrix(spark, path))
     # preserve persisted metadata_cols — same hazard as the IVFPQ twin
     # (r7 review: this site was initially missed)
     meta_cols = _require_index_metadata(
@@ -2342,21 +2360,18 @@ def _tombstone_frames(spark, index_root: str):
     ``(names, df_or_None)``. All tombstones in one store must target
     the SAME column (mixed targets would need per-column anti-joins
     and make 'is this id deleted' ambiguous) — enforced here so every
-    reader shares the check."""
-    jvm = spark._jvm
-    root = jvm.org.apache.hadoop.fs.Path(f"{index_root}/tombstones")
-    fs = root.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(root):
-        return [], None
-    names = sorted(
-        st.getPath().getName()
-        for st in fs.listStatus(root)
-        if st.isDirectory() and st.getPath().getName().startswith("del-")
-    )
+    reader shares the check. One recursive listing finds the dirs and
+    keys the memoized union schema; tombstone dirs are written once,
+    by rename, so the listing changes with every delete or compaction
+    (hidden ``.del-*`` staging dirs are not live tombstones)."""
+    root = f"{index_root}/tombstones"
+    files = artifact_memo.listing(spark, root)
+    parents = {f.rsplit("/", 2)[-2] for f, _, _ in files or ()}
+    names = sorted(n for n in parents if n.startswith("del-"))
     if not names:
         return [], None
-    df = spark.read.parquet(
-        *[f"{index_root}/tombstones/{n}" for n in names]
+    df = artifact_memo.read_parquet(
+        spark, [f"{root}/{n}" for n in names], root, files
     )
     if len(df.columns) != 1:
         raise ValueError(
@@ -2474,7 +2489,7 @@ def delete_from_index(
                     "deletes are a static-layout contract; fold the "
                     "stream first."
                 )
-    schema = spark.read.parquet(f"{path}/{data_sub}").schema
+    schema = artifact_memo.read_layout(spark, path, data_sub).schema
     if id_col not in schema.fieldNames():
         raise ValueError(
             f"delete_from_index: column {id_col!r} is not persisted in "
@@ -2628,7 +2643,7 @@ def compact_index_cells(
             return n
 
         files_before = _count_files()
-        df = spark.read.parquet(f"{path}/{data_sub}")
+        df = artifact_memo.read_layout(spark, path, data_sub)
         # apply live tombstones physically (r9): snapshot the dir list
         # FIRST — a delete landing mid-compaction is not folded in and
         # must survive; we clear exactly what we folded, after the swap

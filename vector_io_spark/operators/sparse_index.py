@@ -32,12 +32,23 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from vector_io_spark import artifact_memo
 from vector_io_spark.session import local_rows_df
 from vector_io_spark.operators.similarity import (
     _apply_tombstones,
     _clear_tombstones,
     _idempotent_delta_write,
 )
+
+
+def _num_shards_of(rows):
+    return int(rows[0]["num_shards"])
+
+
+def _num_shards(spark, path: str) -> int:
+    """The shard count of the one-row ``meta`` table, memoized on its
+    listing (:mod:`vector_io_spark.artifact_memo`)."""
+    return artifact_memo.small_table(spark, f"{path}/meta", _num_shards_of)
 
 
 def _explode_postings(
@@ -116,9 +127,7 @@ def append_to_sparse_index(
     renames are metadata ops; nothing resident is read or rewritten.
     """
     spark = doc_sparse.sparkSession
-    num_shards = int(
-        spark.read.parquet(f"{path}/meta").collect()[0]["num_shards"]
-    )
+    num_shards = _num_shards(spark, path)
     entries = _explode_postings(doc_sparse, doc_id, sparse_col, num_shards)
     _idempotent_delta_write(
         entries, f"{path}/postings", delta_token, partition_col="shard"
@@ -189,15 +198,14 @@ def sparse_index_probe_topk_batch(
             f"entries exceed MAX_QUERY_ENTRIES={MAX_QUERY_ENTRIES} — the "
             "query table is driver-built and broadcast; split the batch."
         )
-    meta = spark.read.parquet(f"{path}/meta").collect()[0]
-    num_shards = int(meta["num_shards"])
+    num_shards = _num_shards(spark, path)
     buckets = sorted({b for _, b, _ in rows})
     shards = sorted({b % num_shards for b in buckets})
     qdf = local_rows_df(
         spark, rows, "query_id string, bucket int, wq_int bigint"
     )
     scan = (
-        spark.read.parquet(f"{path}/postings")
+        artifact_memo.read_layout(spark, path, "postings")
         .where(F.col("shard").isin(shards))
         .where(F.col("bucket").isin(buckets))
     )
@@ -279,7 +287,7 @@ def sparse_index_stats(spark, path: str, top_buckets: int = 20) -> DataFrame:
     a WindowGroupLimit over the rollup; the 1-row total broadcasts.
     Nothing corpus-sized anywhere.
     """
-    scan = spark.read.parquet(f"{path}/postings")
+    scan = artifact_memo.read_layout(spark, path, "postings")
     per_bucket = scan.groupBy("shard", "bucket").agg(
         F.count("*").cast("long").alias("df")
     )
@@ -299,9 +307,7 @@ def sparse_index_stats(spark, path: str, top_buckets: int = 20) -> DataFrame:
             ),
         )
     )
-    nsh = int(
-        spark.read.parquet(f"{path}/meta").collect()[0]["num_shards"]
-    )
+    nsh = _num_shards(spark, path)
     tot = per_shard.agg(
         F.sum("n_postings").alias("__t"),
         F.max("n_postings").alias("__mx"),
@@ -386,7 +392,7 @@ def rebuild_sparse_if_drifted(
                 "not a populated sparse index layout"
             )
         n_docs = (
-            spark.read.parquet(f"{path}/postings")
+            artifact_memo.read_layout(spark, path, "postings")
             .select("doc_id")
             .distinct()
             .count()
@@ -396,9 +402,7 @@ def rebuild_sparse_if_drifted(
             float(row["imb"]),
         )
 
-    num_shards = int(
-        spark.read.parquet(f"{path}/meta").collect()[0]["num_shards"]
-    )
+    num_shards = _num_shards(spark, path)
     share_before, imb_before = _measure()
     out = {
         "rebuilt": False,

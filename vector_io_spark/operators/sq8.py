@@ -38,6 +38,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 
+from vector_io_spark import artifact_memo
 from vector_io_spark.session import local_rows_df
 from vector_io_spark.functions.vectors import cosine_similarity
 from vector_io_spark.operators.similarity import (
@@ -49,6 +50,16 @@ from vector_io_spark.operators.similarity import (
     _lloyd,
     _load_centroid_matrix,
 )
+
+
+def _bounds_pair(rows):
+    return tuple(rows[0]["los"]), tuple(rows[0]["his"])
+
+
+def _load_sq8_bounds(spark, path: str):
+    """(los, his) per-dimension tuples of an SQ8 layout's ``bounds``
+    row, memoized on the table's listing."""
+    return artifact_memo.small_table(spark, f"{path}/bounds", _bounds_pair)
 
 
 def write_sq8_index(
@@ -239,15 +250,15 @@ def sq8_index_probe_topk(
     the hash-exact oracle twin (ann_topk_sq8_exact).
 
     Scale shape: bounds (one d-array row) and centroids (num_cells
-    rows) collect to the driver; the cells scan is partition-pruned;
+    rows) collect to the driver once per build (memoized on their
+    listing); the cells scan is partition-pruned;
     reconstruction+scoring stay in whole-stage codegen; only candidate
     (query, id, score) rows reach the top-k window.
     """
     import numpy as np
 
     cent = _load_centroid_matrix(spark, path)
-    brow = spark.read.parquet(f"{path}/bounds").collect()[0]
-    los, his = list(brow["los"]), list(brow["his"])
+    los, his = _load_sq8_bounds(spark, path)
     qrows = _collect_bounded_queries(
         queries, query_id, query_vec, "sq8_index_probe_topk"
     )
@@ -270,7 +281,7 @@ def sq8_index_probe_topk(
         f"{query_id} {qid_dt}, cell int, __qv array<float>",
     )
     cells = sorted({c for _, c in probe_pairs})
-    scan = spark.read.parquet(f"{path}/cells")
+    scan = artifact_memo.read_layout(spark, path, "cells")
     _check_return_cols(
         scan, return_cols, corpus_id, "code", query_id,
         "sq8_index_probe_topk",
@@ -381,7 +392,7 @@ def rebuild_sq8_if_drifted(
             "a decision over zero vectors would always keep a "
             "possibly-degraded index"
         )
-    nlist = int(spark.read.parquet(f"{path}/centroids").count())
+    nlist = len(_load_centroid_matrix(spark, path))
     out = {
         "rebuilt": False,
         "out_frac_before": float(before["out_frac"]),

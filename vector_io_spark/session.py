@@ -82,22 +82,41 @@ def get_spark(
     return builder.getOrCreate()
 
 
-def local_rows_df(spark: SparkSession, rows, schema, slices: int = 1):
-    """``createDataFrame`` for SMALL driver-side row lists without the
-    default-parallelism trap.
+def local_rows_df(spark: SparkSession, rows, schema):
+    """A DataFrame over a SMALL driver-side row list that Spark plans as
+    a JVM-local ``LocalTableScan``: collecting it, or a ``select`` /
+    ``limit`` over it, starts ZERO Spark jobs, and broadcasting it runs
+    one JVM-only job with no Python worker.
 
-    ``spark.createDataFrame(list, schema)`` parallelizes the pickled
-    rows into ``defaultParallelism`` slices (32 here); every action
-    over the frame then pays one Python-worker round-trip PER SLICE,
-    and the artifact-write idiom ``coalesce(1).write`` serializes all
-    32 round-trips into a single task — measured 6.6-6.8 s per action
-    for a 1024-row frame at local[32] vs 0.7 s with one slice (r12).
-    Conversion semantics are unchanged (same row→Row verifier path,
-    same schema application); only the slice count differs. Use for
-    any O(KB) driver-built frame: codebooks, parameter tables, probe
-    lists, rank offsets. Not for anything data-proportional.
+    ``rows`` are tuples in ``schema`` order; ``schema`` is a DDL string
+    or a ``StructType``. The rows become one Arrow table (values convert
+    by pyarrow's type rules, which reject the wrong-typed values the
+    Python row verifier rejects) and reach the JVM as a local relation.
+    ``spark.createDataFrame(list, schema)`` and a ``parallelize`` of
+    pickled rows plan an RDD scan instead, so every action over them
+    pays a Python-worker job (4-core VM, local[2]: collecting a 16-row
+    query frame took about 250 ms and 1 job that way, 35 ms and 0 jobs
+    as a local relation). Use for any O(KB) driver-built frame:
+    codebooks, parameter tables, probe lists, rank offsets. Not for
+    anything data-proportional: the rows live in the query plan.
     """
-    return spark.createDataFrame(
-        spark.sparkContext.parallelize(rows, numSlices=max(1, slices)),
-        schema,
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import DataType, StructType
+
+    struct = schema if isinstance(schema, StructType) else DataType.fromDDL(schema)
+    arrow = to_arrow_schema(struct)
+    rows = list(rows)
+    width = len(struct.fields)
+    bad = next((r for r in rows if len(r) != width), None)
+    if bad is not None:
+        raise ValueError(
+            f"local_rows_df: row {bad!r} has {len(bad)} fields, the "
+            f"schema {struct.simpleString()} has {width}"
+        )
+    columns = list(zip(*rows)) if rows else [()] * width
+    table = pa.Table.from_arrays(
+        [pa.array(col, type=f.type) for col, f in zip(columns, arrow)],
+        schema=arrow,
     )
+    return spark.createDataFrame(table, struct)
